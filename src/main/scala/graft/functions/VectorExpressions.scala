@@ -45,6 +45,11 @@ case class FloatDotProduct(left: Expression, right: Expression)
   private lazy val integral: Boolean =
     elemType(left).contains(LongType) && elemType(right).contains(LongType)
 
+  // element types of the floating path, resolved once per expression
+  // rather than per row by the interpreted eval
+  private lazy val leftElem: DataType = elemType(left).get
+  private lazy val rightElem: DataType = elemType(right).get
+
   override def dataType: DataType = if (integral) LongType else DoubleType
   override def prettyName: String = "graft_dot"
   override def nullable: Boolean = true
@@ -72,21 +77,20 @@ case class FloatDotProduct(left: Expression, right: Expression)
       }
       acc
     } else {
-      def get(arr: ArrayData, t: DataType, i: Int): Double = t match {
-        case FloatType => arr.getFloat(i).toDouble
-        case _ => arr.getDouble(i)
-      }
-      val lt = elemType(left).get
-      val rt = elemType(right).get
       var acc = 0.0
       var i = 0
       while (i < n) {
         if (elementsNullable && (x.isNullAt(i) || y.isNullAt(i))) return null
-        acc += get(x, lt, i) * get(y, rt, i)
+        acc += floatingAt(x, leftElem, i) * floatingAt(y, rightElem, i)
         i += 1
       }
       acc
     }
+  }
+
+  private def floatingAt(arr: ArrayData, t: DataType, i: Int): Double = t match {
+    case FloatType => arr.getFloat(i).toDouble
+    case _ => arr.getDouble(i)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

@@ -1719,10 +1719,7 @@ object CdcBinlog {
     import s.implicits._
     Layout.retryOnceOnMissing {
       val (doclog, cells) = Layout.committedIndexLegs(s, indexDir, "cells")
-      val live = doclog.groupBy($"vec_id")
-        .agg(max(struct($"ver", $"deleted")).as("m"))
-        .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-        .filter(!$"deleted")
+      val live = Layout.latestImages(doclog, "vec_id").filter(!$"deleted")
       cells.join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
         .orderBy($"vec_id").select($"embedding")
         .head().getSeq[Long](0) // <= 1 slim row — materializes INSIDE the retry
@@ -2099,43 +2096,58 @@ object CdcBinlog {
       }.orderBy($"keeper_doc_id")
     }
 
-  /** Current duplicate groups from a cdcm6 fingerprint log: doc-log
-    * argmax to the latest version per doc, live rows only, then group
-    * by fingerprint (keeper = min doc_id, dd01's convention). The one
-    * corpus-proportional step is the argmax over the log — bounded by
-    * [[compactCdcFpLog]] in steady state.
-    */
-  /** Read a versioned `seg=` state log through the committed-segments
-    * contract ([[Layout.committedSegs]] — `_SUCCESS` present), the same
-    * view [[cdcLogStats]] and every fold input take: a torn or
-    * in-flight append is invisible to reports and probes, and an
-    * absent or not-yet-committed log reads as None instead of an
+  /** Read a versioned `seg=` state log through its committed view
+    * ([[Layout.committedView]] — `_SUCCESS` present), the same view
+    * [[cdcLogStats]] and every fold input take: a torn or in-flight
+    * append is invisible to reports and probes, and an absent or
+    * not-yet-committed log reads as None instead of an
     * AnalysisException (so "unknown doc probes empty" holds even
     * before the first committed batch).
     */
   private[graft] def readCommittedLog(s: SparkSession,
                                       logDir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(logDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = Layout.committedSegs(fs, p)
-    if (segs.isEmpty) None
-    else Some(s.read.option("basePath", logDir)
-      .parquet(segs.map(n => s"$logDir/$n"): _*))
+    val segs = Layout.committedView(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+    if (segs.isEmpty) None else Some(Layout.readSegments(s, logDir, segs))
   }
 
+  /** Current duplicate groups from a cdcm6 fingerprint log: doc-log
+    * argmax to the latest version per doc, live rows only, then group
+    * by fingerprint (keeper = min doc_id, dd01's convention). The one
+    * corpus-proportional step is the argmax over the log — bounded by
+    * [[compactCdcFpLog]] in steady state.
+    */
   private[graft] def cdcFpGroups(s: SparkSession, logDir: String): DataFrame = {
     import s.implicits._
-    readCommittedLog(s, logDir).getOrElse(
+    val log = readCommittedLog(s, logDir).getOrElse(
         return Seq.empty[(String, Long, Long)]
           .toDF("fp", "keeper_doc_id", "n_docs"))
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"doc_id", $"m.deleted".as("deleted"), $"m.fp".as("fp"))
+    Layout.latestImages(log, "doc_id", "fp")
       .filter(!$"deleted")
       .groupBy($"fp")
       .agg(min($"doc_id").as("keeper_doc_id"), count(lit(1)).as("n_docs"))
       .filter($"n_docs" >= 2)
       .orderBy($"keeper_doc_id")
+  }
+
+  /** The bounded broadcast-size gate shared by every screening probe:
+    * true iff `ids` holds at most `cap` rows — for caps below
+    * Int.MaxValue - 1; the limit arithmetic clamps there, so a cap at
+    * or past 2^31 can report under-cap for a larger set (any such cap
+    * is an absurd broadcast intent anyway — rows alone would exceed the
+    * 512M-row broadcast hard cap). The `limit(cap + 1)` bounds the
+    * COUNT job's result (the count can never materialize more than
+    * cap+1 rows); the aggregation feeding `ids` (a distinct, an argmax)
+    * still scans its own filtered input — the limit is a result bound,
+    * not a scan bound. cap = 0 is a valid "never hint" setting (the
+    * shuffle-fallback specs use it); negative caps are a caller error
+    * named here rather than an opaque limit(-n) failure.
+    */
+  private def underCap(ids: DataFrame, cap: Long): Boolean = {
+    require(cap >= 0,
+      s"maxBroadcastCandidates must be >= 0 (got $cap); use 0 to force " +
+        "the shuffle path, never a negative")
+    ids.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).count() <= cap
   }
 
   /** Exact-duplicate partners of ONE doc from the fp log — the
@@ -2174,36 +2186,14 @@ object CdcBinlog {
     * join — AQE-splittable, skew-safe. Identical rows on either path
     * (spec-pinned); only the join strategy moves.
     */
-  /** The bounded broadcast-size gate shared by every screening probe:
-    * true iff `ids` holds at most `cap` rows — for caps below
-    * Int.MaxValue - 1; the limit arithmetic clamps there, so a cap at
-    * or past 2^31 can report under-cap for a larger set (any such cap
-    * is an absurd broadcast intent anyway — rows alone would exceed the
-    * 512M-row broadcast hard cap). The `limit(cap + 1)` bounds the
-    * COUNT job's result (the count can never materialize more than
-    * cap+1 rows); the aggregation feeding `ids` (a distinct, an argmax)
-    * still scans its own filtered input — the limit is a result bound,
-    * not a scan bound. cap = 0 is a valid "never hint" setting (the
-    * shuffle-fallback specs use it); negative caps are a caller error
-    * named here rather than an opaque limit(-n) failure.
-    */
-  private def underCap(ids: DataFrame, cap: Long): Boolean = {
-    require(cap >= 0,
-      s"maxBroadcastCandidates must be >= 0 (got $cap); use 0 to force " +
-        "the shuffle path, never a negative")
-    ids.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).count() <= cap
-  }
-
   private[graft] def cdcFpProbe(s: SparkSession, logDir: String,
                                 docId: Long,
                                 maxBroadcastCandidates: Long = 1L << 20): DataFrame = {
     import s.implicits._
     val empty = Seq.empty[(Long, String)].toDF("dup_doc_id", "fp")
     val log = readCommittedLog(s, logDir).getOrElse(return empty)
-    val t = log.filter($"doc_id" === docId)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"m.deleted".as("deleted"), $"m.fp".as("fp"))
+    val t = Layout.latestImages(log.filter($"doc_id" === docId), "doc_id", "fp")
+      .select($"deleted", $"fp")
       .collect() // <= 1 row by construction (one group key)
     if (t.isEmpty || t.head.getBoolean(0)) empty
     else {
@@ -2211,11 +2201,10 @@ object CdcBinlog {
       val candIds = log.filter($"fp" === fp && $"doc_id" =!= docId)
         .select($"doc_id").distinct()
       val small = underCap(candIds, maxBroadcastCandidates)
-      log.join(if (small) broadcast(candIds) else candIds, "doc_id")
-        .groupBy($"doc_id")
-        .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-        .select($"doc_id".as("dup_doc_id"), $"m.deleted".as("deleted"),
-          $"m.fp".as("fp"))
+      Layout.latestImages(
+          log.join(if (small) broadcast(candIds) else candIds, "doc_id"),
+          "doc_id", "fp")
+        .select($"doc_id".as("dup_doc_id"), $"deleted", $"fp")
         .filter(!$"deleted" && $"fp" === fp)
         .select($"dup_doc_id", $"fp")
         .orderBy($"dup_doc_id")
@@ -2255,35 +2244,24 @@ object CdcBinlog {
     * contract as the siblings: never run concurrently with ingest or a
     * report; published via the two-rename [[Layout.publishDir]] swap.
     */
-  def compactCdcFpLog(s: SparkSession, logDir: String): Unit = {
-    import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(logDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // cross-process mutex (the text/ANN twins' contract): a concurrent
-    // fold of the same structure fails by name
-    Layout.withFoldLease(fs, p) {
-    // committed segments only + the replay fence — the text/ANN twins'
-    // contract (Layout's replay-fence block)
-    val segs = Layout.committedSegs(fs, p)
-    require(segs.nonEmpty, s"compact: no committed segments under $logDir")
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val staging = s"$logDir.compact-${ProcessHandle.current().pid()}"
-    s.read.option("basePath", logDir)
-      .parquet(segs.map(n => s"$logDir/$n"): _*)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"),
-        $"m.deleted".as("deleted"), $"m.fp".as("fp"))
-      .filter(!$"deleted")
-      .coalesce(4)
-      .write.mode("overwrite").parquet(s"$staging/seg=base")
-    upTo.foreach(u =>
-      Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-    Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
+  def compactCdcFpLog(s: SparkSession, logDir: String): Unit =
+    compactCdcLog(s, logDir)
+
+  /** The one fold body of the single-leg state logs ([[compactCdcFpLog]],
+    * [[compactCdcBandLog]]) over [[Layout.foldCommitted]] — like
+    * [[appendCdcFpSegment]], column-agnostic: every column besides
+    * (doc_id, ver, deleted) rides through the latest-image argmax as
+    * payload, and the live images become the new base segment.
+    */
+  private def compactCdcLog(s: SparkSession, logDir: String): Unit =
+    Layout.foldCommitted(s, logDir, Nil, "compact") { (segs, staging) =>
+      val log = Layout.readSegments(s, logDir, segs)
+      val payload = log.columns.filterNot(Set("doc_id", "ver", "deleted", "seg"))
+      Layout.latestImages(log, "doc_id", payload.toIndexedSeq: _*)
+        .filter(!col("deleted"))
+        .coalesce(4)
+        .write.mode("overwrite").parquet(s"$staging/seg=base")
     }
-  }
 
   // ---- CDC-maintained NEAR-dup state: the LSH band log (cdcm15) -------
   //
@@ -2365,10 +2343,8 @@ object CdcBinlog {
     // shingle/band arrays never enter the agg exchange; the winning
     // versions' arrays come back by a (doc_id, ver) join, the same
     // split the text/ANN folds use.
-    val liveKeys = log.select($"doc_id", $"ver", $"deleted")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
+    val liveKeys = Layout.latestImages(
+        log.select($"doc_id", $"ver", $"deleted"), "doc_id")
       .filter(!$"deleted")
     log.join(liveKeys.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
       .select($"doc_id", $"sh", $"bands")
@@ -2464,10 +2440,9 @@ object CdcBinlog {
     import s.implicits._
     val empty = Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")
     val log = readCommittedLog(s, logDir).getOrElse(return empty)
-    val t = log.filter($"doc_id" === docId)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"sh", $"bands")).as("m"))
-      .select($"m.deleted".as("deleted"), $"m.sh".as("sh"), $"m.bands".as("bands"))
+    val t = Layout.latestImages(log.filter($"doc_id" === docId),
+        "doc_id", "sh", "bands")
+      .select($"deleted", $"sh", $"bands")
       .collect() // <= 1 row by construction (one group key)
     if (t.isEmpty || t.head.getBoolean(0)) empty
     else {
@@ -2487,12 +2462,9 @@ object CdcBinlog {
         .filter(inBuckets)
         .select($"doc_id").distinct()
       val small = underCap(candIds, maxBroadcastCandidates)
-      val liveCand = log
-        .join(if (small) broadcast(candIds) else candIds, "doc_id")
-        .groupBy($"doc_id")
-        .agg(max(struct($"ver", $"deleted", $"sh", $"bands")).as("m"))
-        .select($"doc_id", $"m.deleted".as("deleted"),
-          $"m.sh".as("sh"), $"m.bands".as("bands"))
+      val liveCand = Layout.latestImages(
+          log.join(if (small) broadcast(candIds) else candIds, "doc_id"),
+          "doc_id", "sh", "bands")
         .filter(!$"deleted")
         // live-bands re-check: candidacy is defined on CURRENT images
         .select($"doc_id", $"sh", explode($"bands").as("b"))
@@ -2516,31 +2488,8 @@ object CdcBinlog {
     * construction (the argmax already ignored everything it removes —
     * spec-pinned in CdcBandLogSpec).
     */
-  def compactCdcBandLog(s: SparkSession, logDir: String): Unit = {
-    import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(logDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.withFoldLease(fs, p) {
-    val segs = Layout.committedSegs(fs, p)
-    require(segs.nonEmpty, s"compact: no committed segments under $logDir")
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val staging = s"$logDir.compact-${ProcessHandle.current().pid()}"
-    s.read.option("basePath", logDir)
-      .parquet(segs.map(n => s"$logDir/$n"): _*)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"sh", $"bands")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"),
-        $"m.sh".as("sh"), $"m.bands".as("bands"))
-      .filter(!$"deleted")
-      .coalesce(4)
-      .write.mode("overwrite").parquet(s"$staging/seg=base")
-    upTo.foreach(u =>
-      Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-    Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
-    }
-  }
+  def compactCdcBandLog(s: SparkSession, logDir: String): Unit =
+    compactCdcLog(s, logDir)
 
   // ---- Batched ingest screening: one joined pass per micro-batch ------
   //
@@ -2600,21 +2549,17 @@ object CdcBinlog {
     val targets = docIds.select($"doc_id").distinct()
     val tSmall = underCap(targets, maxBroadcastCandidates)
     def sideT(df: DataFrame): DataFrame = if (tSmall) broadcast(df) else df
-    val tLive = log.join(sideT(targets), "doc_id")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"doc_id".as("probe_doc_id"), $"m.deleted".as("deleted"),
-        $"m.fp".as("fp"))
+    val tLive = Layout.latestImages(log.join(sideT(targets), "doc_id"), "doc_id", "fp")
+      .select($"doc_id".as("probe_doc_id"), $"deleted", $"fp")
       .filter(!$"deleted")
     val candIds = log.select($"doc_id", $"fp")
       .join(sideT(tLive.select($"fp").distinct()), "fp")
       .select($"doc_id").distinct()
     val cSmall = underCap(candIds, maxBroadcastCandidates)
-    log.join(if (cSmall) broadcast(candIds) else candIds, "doc_id")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"fp")).as("m"))
-      .select($"doc_id".as("dup_doc_id"), $"m.deleted".as("deleted"),
-        $"m.fp".as("fp"))
+    Layout.latestImages(
+        log.join(if (cSmall) broadcast(candIds) else candIds, "doc_id"),
+        "doc_id", "fp")
+      .select($"doc_id".as("dup_doc_id"), $"deleted", $"fp")
       .filter(!$"deleted")
       .join(sideT(tLive.select($"probe_doc_id", $"fp")), "fp")
       .filter($"dup_doc_id" =!= $"probe_doc_id")
@@ -2654,11 +2599,10 @@ object CdcBinlog {
     val targets = docIds.select($"doc_id").distinct()
     val tSmall = underCap(targets, maxBroadcastCandidates)
     def sideT(df: DataFrame): DataFrame = if (tSmall) broadcast(df) else df
-    val tLive = log.join(sideT(targets), "doc_id")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"sh", $"bands")).as("m"))
-      .select($"doc_id".as("probe_doc_id"), $"m.deleted".as("deleted"),
-        $"m.sh".as("sh_t"), $"m.bands".as("bands_t"))
+    val tLive = Layout.latestImages(log.join(sideT(targets), "doc_id"),
+        "doc_id", "sh", "bands")
+      .select($"doc_id".as("probe_doc_id"), $"deleted",
+        $"sh".as("sh_t"), $"bands".as("bands_t"))
       .filter(!$"deleted")
     // (probe, band-key) rows: a null/empty bands array explodes to
     // nothing — that target has no buckets and screens empty
@@ -2672,11 +2616,9 @@ object CdcBinlog {
     val cSmall = underCap(candIds, maxBroadcastCandidates)
     def sideC(df: DataFrame): DataFrame = if (cSmall) broadcast(df) else df
     // slim liveness argmax over candidates; arrays fetched by join
-    val liveKeys = log.select($"doc_id", $"ver", $"deleted")
-      .join(sideC(candIds), "doc_id")
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
+    val liveKeys = Layout.latestImages(
+        log.select($"doc_id", $"ver", $"deleted").join(sideC(candIds), "doc_id"),
+        "doc_id")
       .filter(!$"deleted")
       .select($"doc_id", $"ver")
     val liveCand = log.join(sideC(liveKeys), Seq("doc_id", "ver"))
@@ -2746,12 +2688,11 @@ object CdcBinlog {
     import s.implicits._
     val p = new org.apache.hadoop.fs.Path(logDir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = Layout.committedSegs(fs, p)
+    val segs = Layout.committedView(fs, p)
     val nSegs = segs.count(_ != "seg=base")
     if (segs.isEmpty)
       return Seq((0L, 0L, 0L, nSegs)).toDF("n_rows", "n_keys", "n_live", "n_segments")
-    s.read.option("basePath", logDir)
-      .parquet(segs.map(n => s"$logDir/$n"): _*)
+    Layout.readSegments(s, logDir, segs)
       .select(col(keyCol).as("k"), $"ver", $"deleted")
       .groupBy($"k")
       .agg(count(lit(1)).as("n_vers"), max(struct($"ver", $"deleted")).as("m"))
@@ -3003,12 +2944,12 @@ object CdcBinlog {
               // concurrently (guide §2.6); both legs' fences sit at
               // the same ordinal, so evaluating both uncurries the
               // old short-circuit without changing what gets written
-              val Seq(fpOk, bandOk) = inParallelLegs(Seq(
+              val Seq(fpOk, bandOk) = Layout.inParallelLegs(Seq(
                 () => appendCdcFpSegment(fp, fpLog, f"b$batchId%06d"),
                 () => appendCdcFpSegment(band, bandLog, f"b$batchId%06d")))
               if (fpOk && bandOk && appended.incrementAndGet() == 3)
                 // two independent folds of disjoint structures
-                inParallelLegs(Seq(
+                Layout.inParallelLegs(Seq(
                   () => compactCdcFpLog(s, fpLog),
                   () => compactCdcBandLog(s, bandLog)))
               ()
@@ -3043,7 +2984,7 @@ object CdcBinlog {
         .filter($"doc_id" % mod === 0).select($"doc_id").distinct()
         .localCheckpoint(true) // slim id set; DETACH — workdir rotates
       // two disjoint-structure screens, run concurrently (guide §2.6)
-      val Seq(fpLeg, bandLeg) = inParallelLegs(Seq(
+      val Seq(fpLeg, bandLeg) = Layout.inParallelLegs(Seq(
         () => Layout.retryOnceOnMissing {
           cdcFpProbeBatch(s, fpLog, probes(fpLog, 7))
             .select(lit("fp").as("leg"), $"probe_doc_id".as("probe_id"),
@@ -3292,7 +3233,7 @@ object CdcBinlog {
           // decode once, route N ways — and run the N independent
           // per-table routes concurrently (guide §2.6): each leg owns
           // its table's image fold and its index directory outright
-          try inParallelLegs(tables.map(tbl => () => {
+          try Layout.inParallelLegs(tables.map(tbl => () => {
             val imgs = cdcm4BatchImages(
               b.filter(b("table") === tbl), batchId).persist()
             try {
@@ -3314,7 +3255,7 @@ object CdcBinlog {
             "segments per index")
       }
       // independent per-index probes, run concurrently (guide §2.6)
-      inParallelLegs(tables.map(tbl => () =>
+      Layout.inParallelLegs(tables.map(tbl => () =>
         Layout.retryOnceOnMissing {
           graft.operators.TextAnalysis
             .bm25TopKViaCdcIndex(s, idxOf(tbl), cdcm4Terms, 50,
@@ -3355,7 +3296,7 @@ object CdcBinlog {
           // the two heterogeneous routes are independent — run them
           // concurrently (guide §2.6); each leg owns its own image
           // fold, cache and index directory
-          try inParallelLegs(Seq(
+          try Layout.inParallelLegs(Seq(
             () => {
               val t = cdcm4BatchImages(
                 b.filter(b("table") === "d1"), batchId).persist()
@@ -3391,7 +3332,7 @@ object CdcBinlog {
       // the vector index itself (one slim row to the driver)
       val probeVec = annProbeVector(s, annIdx)
       // two disjoint-structure probes, run concurrently (guide §2.6)
-      val Seq(textLeg, annLeg) = inParallelLegs(Seq(
+      val Seq(textLeg, annLeg) = Layout.inParallelLegs(Seq(
         () => Layout.retryOnceOnMissing {
           graft.operators.TextAnalysis
             .bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,
@@ -3493,7 +3434,7 @@ object CdcBinlog {
               // three independent structure legs off one decode — run
               // concurrently (guide §2.6); each leg's staggered fold
               // stays serialized against ITS OWN ingest on its thread
-              inParallelLegs(Seq(
+              Layout.inParallelLegs(Seq(
                 () => if (tNonEmpty) {
                   if (graft.operators.TextAnalysis.appendCdcTextSegment(
                         t, txtIdx, f"b$batchId%06d", nBuckets = cdcm10Buckets) &&
@@ -3553,7 +3494,7 @@ object CdcBinlog {
           "slip would silently drop its replays")
       val probeVec = annProbeVector(s, annIdx)
       // three disjoint-structure probes, run concurrently (guide §2.6)
-      val Seq(textLeg, annLeg, fpLeg) = inParallelLegs(Seq(
+      val Seq(textLeg, annLeg, fpLeg) = Layout.inParallelLegs(Seq(
         () => Layout.retryOnceOnMissing {
           graft.operators.TextAnalysis
             .bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,
@@ -3608,9 +3549,6 @@ object CdcBinlog {
   // ground truth in a common (leg, key_a, key_b, score, r) shape —
   // text BM25, exact MIPS, duplicate groups, and the near-dup pair
   // report with exact Jaccard.
-  private def inParallelLegs[T](legs: Seq[() => T]): Seq[T] =
-    Layout.inParallelLegs(legs)
-
   def cdcm19PolicyDaemonFreshness(s: SparkSession, d: String): DataFrame =
     withRotatingWorkdir("graft-cdcm19") { work =>
       import s.implicits._
@@ -3751,7 +3689,7 @@ object CdcBinlog {
                   }
                 }
               }
-              inParallelLegs(Seq(textLeg0, fpLeg0, bandLeg0, annLeg0))
+              Layout.inParallelLegs(Seq(textLeg0, fpLeg0, bandLeg0, annLeg0))
               ()
             } finally { v.unpersist(); t.unpersist() }
           } finally b.unpersist()
@@ -3765,16 +3703,12 @@ object CdcBinlog {
           s"text=${txtAppends.get()}, ann=${annAppends.get()}, " +
           s"fp=${fpAppends.get()}, band=${bandAppends.get()} appends) — " +
           "every policy needs pressure cycles")
-      require(txtFired.get() >= 1 && annFired.get() >= 1 &&
-        fpFired.get() >= 1 && bandFired.get() >= 1,
-        s"every policy must fire under its planted pressure (text=" +
-          s"${txtFired.get()}, ann=${annFired.get()}, fp=${fpFired.get()}, " +
-          s"band=${bandFired.get()})")
       // the cadence-carrying leg's documented shutdown obligation: a
       // daemon shutting down runs ONE final measure-and-fold regardless
       // of phase, or mid-cadence debt outlives the stream just because
       // it ended (the MaintenanceCadence contract — no shutdown hook,
-      // the caller owes the final measure)
+      // the caller owes the final measure) — and it runs BEFORE the
+      // fired check, so a fold only that obligation owes still counts
       locally {
         val a = bandAdvice()
         if (a.compact) {
@@ -3782,6 +3716,11 @@ object CdcBinlog {
           compactCdcBandLog(s, bandLog)
         }
       }
+      require(txtFired.get() >= 1 && annFired.get() >= 1 &&
+        fpFired.get() >= 1 && bandFired.get() >= 1,
+        s"every policy must fire under its planted pressure (text=" +
+          s"${txtFired.get()}, ann=${annFired.get()}, fp=${fpFired.get()}, " +
+          s"band=${bandFired.get()})")
       // the daemon left nothing owing: the per-append legs measured after
       // every append, the cadence leg just ran its shutdown measure —
       // end-state debt cannot survive either cadence
@@ -3811,7 +3750,7 @@ object CdcBinlog {
       // the four probes read four disjoint, now-quiescent structures and
       // each detaches eagerly — independent jobs, run concurrently
       // (guide §2.6)
-      val Seq(textLeg, annLeg, fpLeg, bandLeg) = inParallelLegs(Seq(
+      val Seq(textLeg, annLeg, fpLeg, bandLeg) = Layout.inParallelLegs(Seq(
         () => Layout.retryOnceOnMissing {
           graft.operators.TextAnalysis
             .bm25TopKViaCdcIndex(s, txtIdx, cdcm4Terms, 50,

@@ -183,28 +183,6 @@ object Layout {
     fs.delete(trash, true)
   }
 
-  /** Run a probe body that may race [[publishDir]] two-rename swaps,
-    * retrying (bounded, with backoff) while it fails on a missing path.
-    * The swap's invariant makes a retry always safe: every rename moves
-    * a COMPLETE directory, so a racing reader either (a) lists one
-    * consistent version — old or new — and succeeds, (b) hits the
-    * one-rename window where the live path is absent (`PATH_NOT_FOUND`
-    * at plan time), or (c) lists the old version and then scans after
-    * the trash delete has removed those files (`FileNotFoundException`
-    * mid-scan). There is NO outcome that silently mixes versions: stale
-    * listings point at renamed-away paths, which fail loudly rather
-    * than resolve to new content. Each retry re-runs `body` from
-    * scratch — it must REBUILD its DataFrames (a by-name block calling
-    * `spark.read` again, so every attempt re-lists) and MATERIALIZE
-    * them (a lazy frame returned unexecuted would defeat the guard).
-    * One retry is NOT always enough: under dense fold churn (overlapped
-    * maintenance legs shorten each fold cycle) a slow probe's attempt
-    * can straddle swap N and its retry straddle swap N+1, so the guard
-    * retries up to [[retryAttempts]] times with a short growing backoff
-    * — a missing path that persists past every attempt is not a
-    * transient window, the state needs [[recoverPublish]], and the
-    * rethrown error says so.
-    */
   /** Run independent legs CONCURRENTLY (guide §2.6: actions are only
     * sequential because the driver calls them sequentially — overlapping
     * independent jobs back-fills executor capacity freed by each job's
@@ -263,6 +241,28 @@ object Layout {
     }
   }
 
+  /** Run a probe body that may race [[publishDir]] two-rename swaps,
+    * retrying (bounded, with backoff) while it fails on a missing path.
+    * The swap's invariant makes a retry always safe: every rename moves
+    * a COMPLETE directory, so a racing reader either (a) lists one
+    * consistent version — old or new — and succeeds, (b) hits the
+    * one-rename window where the live path is absent (`PATH_NOT_FOUND`
+    * at plan time), or (c) lists the old version and then scans after
+    * the trash delete has removed those files (`FileNotFoundException`
+    * mid-scan). There is NO outcome that silently mixes versions: stale
+    * listings point at renamed-away paths, which fail loudly rather
+    * than resolve to new content. Each retry re-runs `body` from
+    * scratch — it must REBUILD its DataFrames (a by-name block calling
+    * `spark.read` again, so every attempt re-lists) and MATERIALIZE
+    * them (a lazy frame returned unexecuted would defeat the guard).
+    * One retry is NOT always enough: under dense fold churn (overlapped
+    * maintenance legs shorten each fold cycle) a slow probe's attempt
+    * can straddle swap N and its retry straddle swap N+1, so the guard
+    * retries up to [[retryAttempts]] times with a short growing backoff
+    * — a missing path that persists past every attempt is not a
+    * transient window, the state needs [[recoverPublish]], and the
+    * rethrown error says so.
+    */
   private[graft] def retryOnceOnMissing[T](body: => T): T = {
     // cause-chain walk is BOUNDED (depth cap + identity cycle guard —
     // a cyclic cause chain must not hang the probe) and the catch
@@ -649,8 +649,9 @@ object Layout {
     finally out.close()
   }
 
-  /** The COMMITTED `seg=*` directory names under a leg (those whose
-    * write finished — `_SUCCESS` present). Fold input comes from here.
+  /** The COMMITTED `seg=*` directory names under one leg (those whose
+    * write finished — `_SUCCESS` present); readers take the
+    * structure-wide [[committedView]].
     */
   private[graft] def committedSegs(fs: org.apache.hadoop.fs.FileSystem,
                                    legDir: org.apache.hadoop.fs.Path): Seq[String] =
@@ -660,18 +661,37 @@ object Layout {
         fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
       .map(_.getName).toSeq.sorted
 
+  /** The COMMITTED view of a segment-logged structure: the `seg=*`
+    * names committed in EVERY one of its `legs` (sub-directories of
+    * `root`; `Nil` for a single-leg log whose segments sit directly
+    * under `root`), intersected. An append writes its legs as separate
+    * non-atomic jobs, so a reader racing a writer (or surviving its
+    * crash) could otherwise see one leg of a batch without the other,
+    * or a leg's torn `_temporary` remains; the intersect pins folds,
+    * probes and stats alike to legs from the same committed batch set.
+    * The one place the rule lives — every reader of a maintained
+    * structure's segments goes through here.
+    */
+  private[graft] def committedView(fs: org.apache.hadoop.fs.FileSystem,
+                                   root: org.apache.hadoop.fs.Path,
+                                   legs: Seq[String] = Nil): Seq[String] =
+    if (legs.isEmpty) committedSegs(fs, root)
+    else legs.map(l => committedSegs(fs, new org.apache.hadoop.fs.Path(root, l)))
+      .reduce(_ intersect _)
+
+  /** Read the named `seg=` directories of one leg as one frame (the
+    * `seg` partition column included).
+    */
+  private[graft] def readSegments(s: SparkSession, legDir: String,
+                                  segs: Seq[String]): DataFrame =
+    s.read.option("basePath", legDir).parquet(segs.map(n => s"$legDir/$n"): _*)
+
   /** The committed two-leg view of a CDC-maintained index for PROBES
-    * and STATS: segments committed in BOTH the doc log and the data
-    * leg (`postings` for the text index, `cells` for the ANN index),
-    * intersected — the same view [[committedSegs]] gives the folds. An
-    * append writes the two legs as two non-atomic jobs, so a reader
-    * racing a writer (or surviving its crash) could otherwise see a
-    * batch's postings without its doclog rows, or either leg's torn
-    * `_temporary` remains; the intersect pins every probe to a
-    * doclog/data pair from the same committed batch set. A leg that
-    * lists EMPTY throws FileNotFoundException — the two-rename publish
-    * window leaves the index root briefly absent, and
-    * [[retryOnceOnMissing]] retries exactly that signal (an absent
+    * and STATS: (doclog, data leg) frames over [[committedView]]'s
+    * segments (`postings` for the text index, `cells` for the ANN
+    * index). An EMPTY view throws FileNotFoundException — the
+    * two-rename publish window leaves the index root briefly absent,
+    * and [[retryOnceOnMissing]] retries exactly that signal (an absent
     * maintained INDEX is a caller error or a transient swap, never a
     * valid empty answer — unlike the single-leg state logs, whose
     * probes answer empty by the ingest-screening contract).
@@ -680,32 +700,76 @@ object Layout {
                                         dataLeg: String): (DataFrame, DataFrame) = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val docDir = s"$indexDir/doclog"
-    val dataDir = s"$indexDir/$dataLeg"
-    val segs = committedSegs(fs, new org.apache.hadoop.fs.Path(docDir))
-      .intersect(committedSegs(fs, new org.apache.hadoop.fs.Path(dataDir)))
+    val segs = committedView(fs, root, Seq("doclog", dataLeg))
     if (segs.isEmpty)
       throw new java.io.FileNotFoundException(
         s"no committed doclog+$dataLeg segment pairs under $indexDir " +
           "(absent index, or a publish swap in flight — probes retry via " +
           "Layout.retryOnceOnMissing)")
-    (s.read.option("basePath", docDir).parquet(segs.map(n => s"$docDir/$n"): _*),
-      s.read.option("basePath", dataDir).parquet(segs.map(n => s"$dataDir/$n"): _*))
+    (readSegments(s, s"$indexDir/doclog", segs),
+      readSegments(s, s"$indexDir/$dataLeg", segs))
   }
 
-  /** Bin-pack a parquet directory toward `targetBytes` per output file —
-    * small-file compaction, the OPTIMIZE half that [[zorderCluster]]'s
-    * re-sort doesn't cover. Streaming ingest (foreachBatch deltas, index
-    * segment appends) accretes many small files; at 100 TB the scan cost
-    * of a million 1 MB files is dominated by per-file open/footer
-    * overhead and task scheduling, so periodic repacking into
-    * ceil(total/target) files is table maintenance, run per partition
-    * directory. Content-preserving rewrite (round-robin repartition — no
-    * sort, no column change), staged and published via [[publishDir]]'s
-    * two-rename swap: a crash leaves a complete directory recoverable
-    * by a single rename, never a half-compacted table. Returns the
-    * output file count.
+  /** Per-key LATEST IMAGE of a versioned (`key`, ver, deleted, ...)
+    * log: one argmax over struct(ver, deleted, `carried`...) per key.
+    * `ver` is unique per key per batch, so a comparison never reaches
+    * `deleted` or the carried columns (a tombstone's null payload never
+    * decides anything). Returns (`key`, ver, deleted, `carried`...)
+    * with tombstones kept — live readers filter `!deleted`.
     */
+  private[graft] def latestImages(log: DataFrame, key: String,
+                                  carried: String*): DataFrame = {
+    val fields = Seq("ver", "deleted") ++ carried
+    log.groupBy(col(key))
+      .agg(max(struct(fields.map(col): _*)).as("m"))
+      .select(col(key) +: fields.map(f => col(s"m.$f").as(f)): _*)
+  }
+
+  /** The commit shell of every fold of a published directory: take the
+    * fold lease on `root`, hand `stage` a fresh `<root>.compact-<pid>`
+    * staging path to write the complete replacement tree into, then
+    * swap it in with [[publishDir]]'s two-rename publish — a crash
+    * leaves residues [[recoverPublish]] adjudicates.
+    */
+  private[graft] def foldPublish[T](s: SparkSession, root: String)
+                                   (stage: String => T): T = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    withFoldLease(fs, p) {
+      val staging = s"$root.compact-${ProcessHandle.current().pid()}"
+      val r = stage(staging)
+      publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
+      r
+    }
+  }
+
+  /** The fold protocol of a segment-logged maintained structure, on top
+    * of [[foldPublish]]: under the lease, take the [[committedView]]
+    * over `legs` (a torn segment belongs to an uncommitted batch that
+    * will replay — dropped from the published tree, never folded or
+    * fenced), fail BY NAME when nothing is committed, hand
+    * `stage(segments, stagingDir)` the consumed segments to write the
+    * structure's own legs from, and record the replay fence —
+    * max(prior fence, consumed ordinals) — in the staging tree so it
+    * publishes atomically with the fold. `op` names the operation in
+    * the error.
+    */
+  private[graft] def foldCommitted(s: SparkSession, root: String,
+                                   legs: Seq[String], op: String)
+                                  (stage: (Seq[String], String) => Unit): Unit =
+    foldPublish(s, root) { staging =>
+      val p = new org.apache.hadoop.fs.Path(root)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val segs = committedView(fs, p, legs)
+      require(segs.nonEmpty, s"$op: no committed segments under $root")
+      val upTo = (foldedThrough(fs, p).toSeq ++
+        segs.filter(_ != "seg=base")
+          .map(n => segmentOrdinal(n.stripPrefix("seg=")))).maxOption
+      stage(segs, staging)
+      upTo.foreach(u =>
+        writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
+    }
+
   /** Automate [[publishDir]]'s documented crash recovery. For a
     * published path `live`, inspect its sibling `.trash-*` /
     * `.compact-*` / `.optimize-*` residues:
@@ -833,24 +897,34 @@ object Layout {
     if (report.isEmpty) "clean" else report.mkString("; ")
   }
 
+  /** Bin-pack a parquet directory toward `targetBytes` per output file —
+    * small-file compaction, the OPTIMIZE half that [[zorderCluster]]'s
+    * re-sort doesn't cover. Streaming ingest (foreachBatch deltas, index
+    * segment appends) accretes many small files; at 100 TB the scan cost
+    * of a million 1 MB files is dominated by per-file open/footer
+    * overhead and task scheduling, so periodic repacking into
+    * ceil(total/target) files is table maintenance, run per partition
+    * directory. Content-preserving rewrite (round-robin repartition — no
+    * sort, no column change), staged and published via [[publishDir]]'s
+    * two-rename swap: a crash leaves a complete directory recoverable
+    * by a single rename, never a half-compacted table. Returns the
+    * output file count.
+    */
   def compactFiles(s: SparkSession, dir: String, targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    withFoldLease(fs, p) {
-    val total = fs.listStatus(p).filter(f =>
-      f.isFile && !f.getPath.getName.startsWith("_")).map(_.getLen).sum
-    val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-    // the staging write executes the lazy plan against the ORIGINAL
-    // directory (which still exists — the swap below comes after), so no
-    // detach is needed; checkpointing here would transiently materialize
-    // the whole table in block storage, a non-starter at 100 TB
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$dir.compact-${ProcessHandle.current().pid()}")
-    s.read.parquet(dir).repartition(n)
-      .write.mode("overwrite").parquet(staging.toString)
-    publishDir(fs, staging, p)
-    n
+    foldPublish(s, dir) { staging =>
+      val total = fs.listStatus(p).filter(f =>
+        f.isFile && !f.getPath.getName.startsWith("_")).map(_.getLen).sum
+      val n = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
+      // the staging write executes the lazy plan against the ORIGINAL
+      // directory (which still exists — the swap comes after), so no
+      // detach is needed; checkpointing here would transiently materialize
+      // the whole table in block storage, a non-starter at 100 TB
+      s.read.parquet(dir).repartition(n)
+        .write.mode("overwrite").parquet(staging)
+      n
     }
   }
 

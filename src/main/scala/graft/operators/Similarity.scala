@@ -441,9 +441,12 @@ object Similarity {
     * of [[assignCells]]: a new batch lands in an existing index without
     * recomputing the coarse quantizer (the standard IVF contract; the
     * quantizer only changes on a rebuild). Same broadcast-argmax shape —
-    * the batch is never shuffled; ties pick the smallest cell id. HOF
-    * arithmetic with explicit double casts (centroids are double arrays,
-    * embeddings float).
+    * the batch is never shuffled; ties pick the smallest cell id.
+    * Centroids are double arrays, so `embedding` must be a float or
+    * double array: `graft_dot` rejects long × floating pairs at
+    * analysis, which is why the CDC callers cast their exact long
+    * embeddings to a float view before assignment — the cast is needed
+    * for typing, not only for rounding.
     */
   private[operators] def assignToCentroids(batch: DataFrame, cent: DataFrame): DataFrame = {
     import batch.sparkSession.implicits._
@@ -504,17 +507,17 @@ object Similarity {
     * wasteful) and land without an exchange: cell files live inside their
     * `cell=` directories, so read tasks carry single-cell rows and the
     * partitionBy write keeps them there. Centroids are untouched. Staged
-    * + swapped under the no-concurrent-probes contract
-    * ([[TextAnalysis.compactTextIndex]]).
+    * + swapped by [[Layout.foldPublish]] (fold lease on `cells`) under the
+    * no-concurrent-probes contract ([[TextAnalysis.compactTextIndex]]).
     */
   def compactAnnIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
-    val staging = s"$indexDir/cells.compact-${ProcessHandle.current().pid()}"
-    s.read.parquet(s"$indexDir/cells")
-      .select($"vec_id", $"label", $"embedding", $"cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/seg=base")
-    TextAnalysis.swapDirs(s, staging, s"$indexDir/cells")
+    Layout.foldPublish(s, s"$indexDir/cells") { staging =>
+      s.read.parquet(s"$indexDir/cells")
+        .select($"vec_id", $"label", $"embedding", $"cell")
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$staging/seg=base")
+    }
   }
 
   // ---- CDC-maintained ANN index (cdcm5) --------------------------------
@@ -590,52 +593,40 @@ object Similarity {
     */
   def compactCdcAnnIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // cross-process mutex (the text twin's contract): a concurrent fold
-    // of the same structure fails by name instead of racing the publish
-    Layout.withFoldLease(fs, p) {
-    // committed segments only, in BOTH legs, + the replay fence — the
-    // text twin's contract verbatim (Layout's replay-fence block)
-    val segs = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/doclog"))
-      .intersect(Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/cells")))
-    require(segs.nonEmpty, s"compact: no committed segments under $indexDir")
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val live = s.read.option("basePath", s"$indexDir/doclog")
-      .parquet(segs.map(n => s"$indexDir/doclog/$n"): _*)
-      .groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
-      .persist() // feeds the cell filter AND the folded doc log
-    try {
-      val staging = s"$indexDir.compact-${ProcessHandle.current().pid()}"
-      val cells = s.read.option("basePath", s"$indexDir/cells")
-        .parquet(segs.map(n => s"$indexDir/cells/$n"): _*)
-        .drop("seg")
-      // three independent staging legs off the pinned `live` frame,
-      // published atomically by the swap below (guide §2.6)
-      Layout.inParallelLegs(Seq(
-        () => cells
-          .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
-          .select(cells.columns.map(col): _*)
-          .repartition($"cell")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$staging/cells/seg=base"),
-        () => live.select($"vec_id", $"ver", $"deleted")
-          .coalesce(4)
-          .write.mode("overwrite").parquet(s"$staging/doclog/seg=base"),
-        // centroids carry over unchanged (the quantizer is rebuild-only)
-        () => s.read.parquet(s"$indexDir/centroids")
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids")))
-      upTo.foreach(u =>
-        Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-      Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
-    } finally live.unpersist()
+    Layout.foldCommitted(s, indexDir, Seq("doclog", "cells"), "compact") { (segs, staging) =>
+      val live = liveDocLog(s, indexDir, segs).persist() // cell filter AND folded doc log
+      try {
+        val cells = Layout.readSegments(s, s"$indexDir/cells", segs).drop("seg")
+        // three independent staging legs off the pinned `live` frame,
+        // published atomically with the fold (guide §2.6)
+        Layout.inParallelLegs(Seq(
+          () => cells
+            .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
+            .select(cells.columns.map(col): _*)
+            .repartition($"cell")
+            .write.mode("overwrite").partitionBy("cell")
+            .parquet(s"$staging/cells/seg=base"),
+          () => writeDocLog(live, staging),
+          // centroids carry over unchanged (the quantizer is rebuild-only)
+          () => s.read.parquet(s"$indexDir/centroids")
+            .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids")))
+      } finally live.unpersist()
     }
   }
+
+  /** The ANN index's live doc log over the fold's committed segments:
+    * latest version per vec_id, tombstones dropped.
+    */
+  private def liveDocLog(s: SparkSession, indexDir: String,
+                         segs: Seq[String]): DataFrame =
+    Layout.latestImages(Layout.readSegments(s, s"$indexDir/doclog", segs), "vec_id")
+      .filter(!col("deleted"))
+
+  /** The folded doc log leg: the live (vec_id, ver, deleted) rows. */
+  private def writeDocLog(live: DataFrame, staging: String): Unit =
+    live.select("vec_id", "ver", "deleted")
+      .coalesce(4)
+      .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")
 
   /** REQUANTIZE the CDC ANN index: re-derive the coarse quantizer from
     * the CURRENT live corpus and re-assign every live vector to it —
@@ -667,84 +658,62 @@ object Similarity {
   def requantizeCdcAnnIndex(s: SparkSession, indexDir: String, k: Int = 16,
                             iterations: Int = 2): Unit = {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.withFoldLease(fs, p) {
-    val segs = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/doclog"))
-      .intersect(Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/cells")))
-    require(segs.nonEmpty, s"requantize: no committed segments under $indexDir")
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val live = s.read.option("basePath", s"$indexDir/doclog")
-      .parquet(segs.map(n => s"$indexDir/doclog/$n"): _*)
-      .groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
-      .persist()
-    try {
-      val cells = s.read.option("basePath", s"$indexDir/cells")
-        .parquet(segs.map(n => s"$indexDir/cells/$n"): _*)
-        .drop("seg")
-      // live rows, OLD cell dropped; the Lloyd loop re-reads these, so
-      // pin them once (live-corpus-sized, same footprint as a compact)
-      val rows = cells
-        .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
-        .select(cells.columns.filterNot(_ == "cell").map(col): _*)
-        .persist()
+    Layout.foldCommitted(s, indexDir, Seq("doclog", "cells"), "requantize") { (segs, staging) =>
+      val live = liveDocLog(s, indexDir, segs).persist()
       try {
-        require(!rows.isEmpty, s"requantize: no live vectors under $indexDir")
-        // the appenders' float-view dance: quantize on floats, store
-        // the exact long arrays the integer-dot probe scores
-        val floatView = rows
-          .withColumn("emb_exact", $"embedding")
-          .withColumn("embedding", $"embedding".cast("array<float>"))
-        // seeds: k smallest LIVE vec_ids (not `vec_id < k` — those ids
-        // may be deleted by now); the window runs over k rows, not the
-        // corpus (limit first), so the single task is bounded by k·dims
-        val seeds = floatView.orderBy($"vec_id").limit(k)
-          .select($"vec_id", $"embedding".cast("array<double>").as("centroid"))
-          .withColumn("cell",
-            (org.apache.spark.sql.functions.row_number().over(
-              org.apache.spark.sql.expressions.Window.orderBy($"vec_id")) - 1))
-          .select($"cell", $"centroid")
-        var cent = seeds.localCheckpoint(true) // k rows, eager — truncates lineage per round
-        for (_ <- 1 to iterations)
-          // a cell that loses every member in a round (duplicate seed
-          // VECTORS tie-break to the smallest cell id) keeps its previous
-          // centroid instead of vanishing: the published quantizer always
-          // has exactly the seeded cell count (= the requested k whenever
-          // the live corpus has at least k vectors — seeds are limit(k)),
-          // so the maintenance policy's "k" is the k that was asked for —
-          // [[annMaintenanceAdvice]]'s at-cap arithmetic relies on that,
-          // and standard IVF keeps k fixed across Lloyd rounds anyway.
-          // A k-row left join per round.
-          cent = cent.select($"cell", $"centroid".as("prev"))
-            .join(cellCentroids(assignToCentroids(floatView, cent)), Seq("cell"), "left")
-            .select($"cell", coalesce($"centroid", $"prev").as("centroid"))
-            .localCheckpoint(true)
-        val assigned = assignToCentroids(floatView, cent)
-          .withColumn("embedding", $"emb_exact").drop("emb_exact")
-        val staging = s"$indexDir.optimize-${ProcessHandle.current().pid()}"
-        // three independent staging legs (assigned reads the pinned
-        // rows, cent is a k-row checkpoint) — run concurrently
-        // (guide §2.6); the swap below publishes them atomically
-        Layout.inParallelLegs(Seq(
-          () => assigned
-            .repartition($"cell")
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$staging/cells/seg=base"),
-          () => live.select($"vec_id", $"ver", $"deleted")
-            .coalesce(4)
-            .write.mode("overwrite").parquet(s"$staging/doclog/seg=base"),
-          () => cent.coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/centroids")))
-        upTo.foreach(u =>
-          Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-        Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
-      } finally rows.unpersist()
-    } finally live.unpersist()
+        val cells = Layout.readSegments(s, s"$indexDir/cells", segs).drop("seg")
+        // live rows, OLD cell dropped; the Lloyd loop re-reads these, so
+        // pin them once (live-corpus-sized, same footprint as a compact)
+        val rows = cells
+          .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
+          .select(cells.columns.filterNot(_ == "cell").map(col): _*)
+          .persist()
+        try {
+          require(!rows.isEmpty, s"requantize: no live vectors under $indexDir")
+          // the appenders' float-view dance: quantize on floats, store
+          // the exact long arrays the integer-dot probe scores
+          val floatView = rows
+            .withColumn("emb_exact", $"embedding")
+            .withColumn("embedding", $"embedding".cast("array<float>"))
+          // seeds: k smallest LIVE vec_ids (not `vec_id < k` — those ids
+          // may be deleted by now); the window runs over k rows, not the
+          // corpus (limit first), so the single task is bounded by k·dims
+          val seeds = floatView.orderBy($"vec_id").limit(k)
+            .select($"vec_id", $"embedding".cast("array<double>").as("centroid"))
+            .withColumn("cell",
+              (org.apache.spark.sql.functions.row_number().over(
+                org.apache.spark.sql.expressions.Window.orderBy($"vec_id")) - 1))
+            .select($"cell", $"centroid")
+          var cent = seeds.localCheckpoint(true) // k rows, eager — truncates lineage per round
+          for (_ <- 1 to iterations)
+            // a cell that loses every member in a round (duplicate seed
+            // VECTORS tie-break to the smallest cell id) keeps its previous
+            // centroid instead of vanishing: the published quantizer always
+            // has exactly the seeded cell count (= the requested k whenever
+            // the live corpus has at least k vectors — seeds are limit(k)),
+            // so the maintenance policy's "k" is the k that was asked for —
+            // [[annMaintenanceAdvice]]'s at-cap arithmetic relies on that,
+            // and standard IVF keeps k fixed across Lloyd rounds anyway.
+            // A k-row left join per round.
+            cent = cent.select($"cell", $"centroid".as("prev"))
+              .join(cellCentroids(assignToCentroids(floatView, cent)), Seq("cell"), "left")
+              .select($"cell", coalesce($"centroid", $"prev").as("centroid"))
+              .localCheckpoint(true)
+          val assigned = assignToCentroids(floatView, cent)
+            .withColumn("embedding", $"emb_exact").drop("emb_exact")
+          // three independent staging legs (assigned reads the pinned
+          // rows, cent is a k-row checkpoint) — run concurrently
+          // (guide §2.6); the fold publishes them atomically
+          Layout.inParallelLegs(Seq(
+            () => assigned
+              .repartition($"cell")
+              .write.mode("overwrite").partitionBy("cell")
+              .parquet(s"$staging/cells/seg=base"),
+            () => writeDocLog(live, staging),
+            () => cent.coalesce(1).write.mode("overwrite")
+              .parquet(s"$staging/centroids")))
+        } finally rows.unpersist()
+      } finally live.unpersist()
     }
   }
 
@@ -766,11 +735,7 @@ object Similarity {
     // committed two-leg view, like the probe: the policy must never
     // threshold on a torn in-flight append's half-written batch
     val (doclog, cells) = Layout.committedIndexLegs(s, indexDir, "cells")
-    val live = doclog
-      .groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val live = Layout.latestImages(doclog, "vec_id").filter(!$"deleted")
     val occupancy = cells
       .join(live.select($"vec_id", $"ver"), Seq("vec_id", "ver"))
       .groupBy($"cell").agg(count(lit(1)).as("n_live"))
@@ -866,11 +831,7 @@ object Similarity {
     // in-flight append is invisible, a mid-swap absence throws the
     // FNF retryOnceOnMissing retries
     val (doclog, cellsBase) = Layout.committedIndexLegs(s, indexDir, "cells")
-    val live = doclog
-      .groupBy($"vec_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"vec_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val live = Layout.latestImages(doclog, "vec_id").filter(!$"deleted")
     val q = lit(qVec.toArray)
     val pruned =
       if (nprobe == Int.MaxValue) cellsBase
@@ -898,12 +859,12 @@ object Similarity {
     */
   def compactIvfPqIndex(s: SparkSession, indexDir: String): Unit = {
     import s.implicits._
-    val staging = s"$indexDir/codes.compact-${ProcessHandle.current().pid()}"
-    s.read.parquet(s"$indexDir/codes")
-      .select($"vec_id", $"label", $"codes", $"cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$staging/seg=base")
-    TextAnalysis.swapDirs(s, staging, s"$indexDir/codes")
+    Layout.foldPublish(s, s"$indexDir/codes") { staging =>
+      s.read.parquet(s"$indexDir/codes")
+        .select($"vec_id", $"label", $"codes", $"cell")
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$staging/seg=base")
+    }
   }
 
   /** sim05 against the persisted index: centroids are read (tiny), the

@@ -710,37 +710,14 @@ object TextAnalysis {
     * one bucket and the partitionBy write lands them back without an
     * exchange.
     *
-    * The rewritten tree is staged beside the index and swapped in with
-    * recursive-delete + rename. Run from a maintenance job, not
-    * concurrently with probes or appends — the [[graft.streaming.CdcMaterializer.compact]]
-    * contract.
+    * The rewritten tree is staged beside the index and swapped in by
+    * [[Layout.foldPublish]]'s two-rename publish. Run from a maintenance
+    * job, not concurrently with probes or appends — the
+    * [[graft.streaming.CdcMaterializer.compact]] contract.
     */
   def compactTextIndex(s: SparkSession, indexDir: String,
-                       nBuckets: Int = textIndexBuckets): Unit = {
-    import s.implicits._
-    val tgt = new org.apache.hadoop.fs.Path(indexDir)
-    Layout.withFoldLease(
-      tgt.getFileSystem(s.sparkContext.hadoopConfiguration), tgt) {
-    val staging = s"$indexDir.compact-${ProcessHandle.current().pid()}"
-    s.read.parquet(s"$indexDir/postings")
-      .select($"term", $"doc_id", $"dl", $"tf", $"tb")
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$staging/postings/seg=base")
-    s.read.parquet(s"$indexDir/termstats")
-      .groupBy($"term").agg(sum($"df").as("df"))
-      .withColumn("tb", pmod(hash($"term"), lit(nBuckets)))
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$staging/termstats/seg=base")
-    s.read.parquet(s"$indexDir/stats")
-      .agg(sum($"n").as("n"), sum($"sumdl").as("sumdl"))
-      .write.mode("overwrite").parquet(s"$staging/stats/seg=base")
-    // the bucket marker travels with the tree (the swap replaces the
-    // whole root, and a fold never changes the bucket count)
-    writeBucketMarker(
-      tgt.getFileSystem(s.sparkContext.hadoopConfiguration), staging, nBuckets)
-    swapDirs(s, staging, indexDir)
-    }
-  }
+                       nBuckets: Int = textIndexBuckets): Unit =
+    foldTextIndex(s, indexDir, nBuckets, moved = false)
 
   /** RE-BUCKET the index: rewrite postings and termstats under a NEW
     * term-bucket count — the lifecycle op [[compactTextIndex]]
@@ -770,47 +747,46 @@ object TextAnalysis {
   def rebucketTextIndex(s: SparkSession, indexDir: String,
                         newBuckets: Int): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
+    foldTextIndex(s, indexDir, newBuckets, moved = true)
+  }
+
+  /** The one body of [[compactTextIndex]] and [[rebucketTextIndex]]:
+    * postings concatenated (re-placed only when `moved`), df re-summed
+    * per term from the slim termstats rows, stats collapsed to one row,
+    * the bucket marker carried in the tree — staged and published by
+    * [[Layout.foldPublish]].
+    */
+  private def foldTextIndex(s: SparkSession, indexDir: String, nBuckets: Int,
+                            moved: Boolean): Unit = {
     import s.implicits._
-    val tgt = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = tgt.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.withFoldLease(fs, tgt) {
-    val staging = s"$indexDir.optimize-${ProcessHandle.current().pid()}"
-    s.read.parquet(s"$indexDir/postings")
-      .select($"term", $"doc_id", $"dl", $"tf")
-      .withColumn("tb", pmod(hash($"term"), lit(newBuckets)))
-      // the one unavoidable shuffle: rows MOVE buckets, so cluster by
-      // the new tb before the partitionBy write (tasks × buckets tiny
-      // files otherwise)
-      .repartition($"tb")
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$staging/postings/seg=base")
-    s.read.parquet(s"$indexDir/termstats")
-      .groupBy($"term").agg(sum($"df").as("df"))
-      .withColumn("tb", pmod(hash($"term"), lit(newBuckets)))
-      .repartition($"tb")
-      .write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$staging/termstats/seg=base")
-    s.read.parquet(s"$indexDir/stats")
-      .agg(sum($"n").as("n"), sum($"sumdl").as("sumdl"))
-      .write.mode("overwrite").parquet(s"$staging/stats/seg=base")
-    writeBucketMarker(fs, staging, newBuckets)
-    swapDirs(s, staging, indexDir)
+    Layout.foldPublish(s, indexDir) { staging =>
+      val posts = s.read.parquet(s"$indexDir/postings")
+        .select($"term", $"doc_id", $"dl", $"tf", $"tb")
+      (if (moved) inBuckets(posts, nBuckets, shuffle = true) else posts)
+        .write.mode("overwrite").partitionBy("tb")
+        .parquet(s"$staging/postings/seg=base")
+      inBuckets(s.read.parquet(s"$indexDir/termstats")
+          .groupBy($"term").agg(sum($"df").as("df")), nBuckets, shuffle = moved)
+        .write.mode("overwrite").partitionBy("tb")
+        .parquet(s"$staging/termstats/seg=base")
+      s.read.parquet(s"$indexDir/stats")
+        .agg(sum($"n").as("n"), sum($"sumdl").as("sumdl"))
+        .write.mode("overwrite").parquet(s"$staging/stats/seg=base")
+      writeBucketMarker(new org.apache.hadoop.fs.Path(indexDir)
+        .getFileSystem(s.sparkContext.hadoopConfiguration), staging, nBuckets)
     }
   }
 
-  /** Swap a staged index tree over the live one via the two-rename
-    * publish ([[graft.operators.Layout.publishDir]]): a crash always
-    * leaves a COMPLETE tree recoverable by one rename — never a window
-    * where the only copy survives under a PID-suffixed staging name.
-    * Callers hold the no-concurrent-probes contract; the path's OWN
-    * filesystem is used (HDFS/S3A/local alike).
+  /** Term rows hashed to their bucket (`tb`) under `nBuckets`. With
+    * `shuffle` the rows are clustered by the new tb before a
+    * partitionBy write — the one unavoidable exchange when rows MOVE
+    * buckets (tasks × buckets tiny files otherwise). Without it, a
+    * fold that keeps the bucket count writes postings read from their
+    * own `tb=` directories back without an exchange.
     */
-  private[operators] def swapDirs(s: SparkSession, staging: String,
-                                  target: String): Unit = {
-    val tgt = new org.apache.hadoop.fs.Path(target)
-    Layout.publishDir(
-      tgt.getFileSystem(s.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(staging), tgt)
+  private def inBuckets(df: DataFrame, nBuckets: Int, shuffle: Boolean): DataFrame = {
+    val b = df.withColumn("tb", pmod(hash(col("term")), lit(nBuckets)))
+    if (shuffle) b.repartition(col("tb")) else b
   }
 
   /** The query terms' bucket ids, computed by Spark's own hash expression
@@ -973,60 +949,8 @@ object TextAnalysis {
     * [[graft.operators.Layout.publishDir]] swap.
     */
   def compactCdcTextIndex(s: SparkSession, indexDir: String,
-                          nBuckets: Int = textIndexBuckets): Unit = {
-    import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // cross-process mutex: the in-process contract (serialized
-    // foreachBatch) can't see a second maintenance JOB; the lease makes
-    // a concurrent fold of the same structure fail by name
-    Layout.withFoldLease(fs, p) {
-    // fold only COMMITTED segments, in BOTH legs (a batch writes
-    // postings then doclog; either torn means the batch never committed
-    // and will replay — its segment must be dropped, not folded), and
-    // record the replay fence so the replay skips instead of doubling
-    // rows against base (Layout's replay-fence contract)
-    val segs = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/doclog"))
-      .intersect(Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/postings")))
-    require(segs.nonEmpty, s"compact: no committed segments under $indexDir")
-    textIndexBucketCount(s, indexDir).foreach(recorded =>
-      require(recorded == nBuckets,
-        s"compact asked for $nBuckets term buckets but the index at $indexDir " +
-          s"records $recorded (re-bucketed?) — pass the recorded count"))
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val live = s.read.option("basePath", s"$indexDir/doclog")
-      .parquet(segs.map(n => s"$indexDir/doclog/$n"): _*)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"),
-        $"m.deleted".as("deleted"), $"m.dl".as("dl"))
-      .filter(!$"deleted")
-      .persist() // feeds the posting filter AND the folded doc log
-    try {
-      val staging = s"$indexDir.compact-${ProcessHandle.current().pid()}"
-      // both staging legs consume the pinned `live` frame and publish
-      // atomically via the directory swap below — independent jobs,
-      // run concurrently (guide §2.6)
-      Layout.inParallelLegs(Seq(
-        () => s.read.option("basePath", s"$indexDir/postings")
-          .parquet(segs.map(n => s"$indexDir/postings/$n"): _*)
-          .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
-          .select($"term", $"doc_id", $"ver", $"dl", $"tf", $"tb")
-          .write.mode("overwrite").partitionBy("tb")
-          .parquet(s"$staging/postings/seg=base"),
-        () => live.select($"doc_id", $"ver", $"deleted", $"dl")
-          .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")))
-      upTo.foreach(u =>
-        Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-      // the marker travels with the tree (the swap replaces the whole
-      // root, and a fold never changes the bucket count)
-      writeBucketMarker(fs, staging, nBuckets)
-      Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
-    } finally live.unpersist()
-    }
-  }
+                          nBuckets: Int = textIndexBuckets): Unit =
+    foldCdcTextIndex(s, indexDir, nBuckets, rebucket = false)
 
   /** [[rebucketTextIndex]] for the CDC-maintained index: rewrite the
     * postings under a NEW term-bucket count — one postings-sized
@@ -1045,43 +969,49 @@ object TextAnalysis {
   def rebucketCdcTextIndex(s: SparkSession, indexDir: String,
                            newBuckets: Int): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive, got $newBuckets")
+    foldCdcTextIndex(s, indexDir, newBuckets, rebucket = true)
+  }
+
+  /** The one body of [[compactCdcTextIndex]] and
+    * [[rebucketCdcTextIndex]] over
+    * [[Layout.foldCommitted]]: the live doc log (argmax, tombstones
+    * dropped) filters the postings and becomes the folded doc log, and
+    * the tree carries the bucket marker. A compact must match the
+    * recorded bucket count and keeps postings in their own `tb=`
+    * directories, exchange-free; only a rebucket re-hashes and shuffles.
+    */
+  private def foldCdcTextIndex(s: SparkSession, indexDir: String,
+                               nBuckets: Int, rebucket: Boolean): Unit = {
     import s.implicits._
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    Layout.withFoldLease(fs, p) {
-    val segs = Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/doclog"))
-      .intersect(Layout.committedSegs(fs, new org.apache.hadoop.fs.Path(s"$indexDir/postings")))
-    require(segs.nonEmpty, s"rebucket: no committed segments under $indexDir")
-    val upTo = (Layout.foldedThrough(fs, p).toSeq ++
-      segs.filter(_ != "seg=base")
-        .map(n => Layout.segmentOrdinal(n.stripPrefix("seg=")))).maxOption
-    val live = s.read.option("basePath", s"$indexDir/doclog")
-      .parquet(segs.map(n => s"$indexDir/doclog/$n"): _*)
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"),
-        $"m.deleted".as("deleted"), $"m.dl".as("dl"))
-      .filter(!$"deleted")
-      .persist()
-    try {
-      val staging = s"$indexDir.optimize-${ProcessHandle.current().pid()}"
-      // independent staging legs off the pinned `live` frame (guide §2.6)
-      Layout.inParallelLegs(Seq(
-        () => s.read.option("basePath", s"$indexDir/postings")
-          .parquet(segs.map(n => s"$indexDir/postings/$n"): _*)
-          .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
-          .select($"term", $"doc_id", $"ver", $"dl", $"tf")
-          .withColumn("tb", pmod(hash($"term"), lit(newBuckets)))
-          .repartition($"tb")
-          .write.mode("overwrite").partitionBy("tb")
-          .parquet(s"$staging/postings/seg=base"),
-        () => live.select($"doc_id", $"ver", $"deleted", $"dl")
-          .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")))
-      upTo.foreach(u =>
-        Layout.writeFoldedThrough(fs, new org.apache.hadoop.fs.Path(staging), u))
-      writeBucketMarker(fs, staging, newBuckets)
-      Layout.publishDir(fs, new org.apache.hadoop.fs.Path(staging), p)
-    } finally live.unpersist()
+    val op = if (rebucket) "rebucket" else "compact"
+    Layout.foldCommitted(s, indexDir, Seq("doclog", "postings"), op) { (segs, staging) =>
+      if (!rebucket) textIndexBucketCount(s, indexDir).foreach(r =>
+        require(r == nBuckets,
+          s"compact asked for $nBuckets term buckets but the index at $indexDir " +
+            s"records $r (re-bucketed?) — pass the recorded count"))
+      val live = Layout.latestImages(
+          Layout.readSegments(s, s"$indexDir/doclog", segs), "doc_id", "dl")
+        .filter(!$"deleted")
+        .persist() // feeds the posting filter AND the folded doc log
+      try {
+        // both staging legs consume the pinned `live` frame and publish
+        // atomically with the fold — independent jobs, run concurrently
+        // (guide §2.6)
+        Layout.inParallelLegs(Seq(
+          () => {
+            val posts = Layout.readSegments(s, s"$indexDir/postings", segs)
+              .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
+              .select($"term", $"doc_id", $"ver", $"dl", $"tf", $"tb")
+            (if (rebucket) inBuckets(posts, nBuckets, shuffle = true) else posts)
+              .write.mode("overwrite").partitionBy("tb")
+              .parquet(s"$staging/postings/seg=base")
+          },
+          () => live.select($"doc_id", $"ver", $"deleted", $"dl")
+            .write.mode("overwrite").parquet(s"$staging/doclog/seg=base")))
+        // the marker travels with the tree (the swap replaces the root)
+        writeBucketMarker(new org.apache.hadoop.fs.Path(indexDir)
+          .getFileSystem(s.sparkContext.hadoopConfiguration), staging, nBuckets)
+      } finally live.unpersist()
     }
   }
 
@@ -1118,11 +1048,7 @@ object TextAnalysis {
     import s.implicits._
     val nb = textIndexBucketCount(s, indexDir).getOrElse(textIndexBuckets)
     val (doclog, postings) = Layout.committedIndexLegs(s, indexDir, "postings")
-    val live = doclog
-      .groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"), $"m.deleted".as("deleted"))
-      .filter(!$"deleted")
+    val live = Layout.latestImages(doclog, "doc_id").filter(!$"deleted")
     val occupancy = postings
       .join(live.select($"doc_id", $"ver"), Seq("doc_id", "ver"))
       .groupBy($"tb").agg(count(lit(1)).as("n_postings"))
@@ -1219,11 +1145,7 @@ object TextAnalysis {
     // in-flight append is invisible, a mid-swap absence throws the
     // FNF retryOnceOnMissing retries
     val (doclog, postings) = Layout.committedIndexLegs(s, indexDir, "postings")
-    val live = doclog.groupBy($"doc_id")
-      .agg(max(struct($"ver", $"deleted", $"dl")).as("m"))
-      .select($"doc_id", $"m.ver".as("ver"),
-        $"m.deleted".as("deleted"), $"m.dl".as("dl"))
-      .filter(!$"deleted")
+    val live = Layout.latestImages(doclog, "doc_id", "dl").filter(!$"deleted")
     val stats = live.agg(count(lit(1)).as("n"), sum($"dl").as("sumdl"))
     val tbs = termBuckets(s, terms, nBuckets)
     val posts = postings

@@ -376,4 +376,45 @@ class FoldLeaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Layout.committedSegs(fs,
       new org.apache.hadoop.fs.Path(s"$idx/doclog")) === Seq("seg=base"))
   }
+
+  test("plain ANN and IVF-PQ compacts lose by name under a held lease; a dead holder's is recovered") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val work = java.nio.file.Files.createTempDirectory("graft-lease-ann")
+    val ann = work.resolve("ann").toString
+    Similarity.buildAnnIndex(e.filter($"vec_id" % 5 =!= 4), ann)
+    Similarity.appendToAnnIndex(spark, e.filter($"vec_id" % 5 === 4), ann, "b1")
+    val pq = work.resolve("ivfpq").toString
+    Similarity.buildIvfPqIndex(e.filter($"vec_id" % 5 =!= 4), pq)
+    Similarity.appendToIvfPqIndex(spark, e.filter($"vec_id" % 5 === 4), pq, "b1")
+    def segs(leg: String) = new java.io.File(leg).listFiles()
+      .map(_.getName).filter(_.startsWith("seg=")).toSet
+    val folds = Seq[(String, () => Unit)](
+      s"$ann/cells" -> (() => Similarity.compactAnnIndex(spark, ann)),
+      s"$pq/codes" -> (() => Similarity.compactIvfPqIndex(spark, pq)))
+    for ((leg, compact) <- folds) {
+      val live = new org.apache.hadoop.fs.Path(leg)
+      assert(segs(leg) === Set("seg=base", "seg=b1"))
+      val token = Layout.acquireFoldLease(fs, live)
+      val err = intercept[IllegalStateException](compact())
+      assert(err.getMessage.contains("fold lease"), s"$leg: ${err.getMessage}")
+      // the loser failed BEFORE staging: segments untouched, no residue
+      assert(segs(leg) === Set("seg=base", "seg=b1"))
+      assert(!new java.io.File(s"$leg.compact-${ProcessHandle.current().pid()}").exists)
+      Layout.releaseFoldLease(fs, live, token)
+      // a crashed holder (a PID that cannot exist) leaves its lease behind:
+      // recoverPublish clears it and the compact then folds
+      val out = fs.create(Layout.foldLeasePath(live), false)
+      try out.write(
+        ("pid=999999999;host=" + java.net.InetAddress.getLocalHost.getHostName +
+          ";ts=0;nonce=0").getBytes("UTF-8"))
+      finally out.close()
+      val report = Layout.recoverPublish(fs, live)
+      assert(report.contains("cleared dead holder's fold lease"), s"$leg: $report")
+      compact()
+      assert(segs(leg) === Set("seg=base"))
+      assert(!fs.exists(Layout.foldLeasePath(live)))
+    }
+  }
 }
